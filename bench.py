@@ -427,8 +427,9 @@ def multi_collection_lag_bench(
 
     - mode="routed" (this engine's design): ONE streaming query ingests
       all collections; the P6 collection router fans out inside the
-      batch as narrow filters over one cached scan, per-collection
-      appends run from driver worker threads. One JVM, one driver loop.
+      batch as narrow filters over one cached scan, and same-schema
+      collections share one write job and one txn manifest. One JVM,
+      one driver loop.
     - mode="per-pipeline" (the reference's deployment shape): one
       CDCStreamPipeline per collection, each with its own source,
       lake, and checkpoint. NOTE: one local JVM then hosts ten DRIVER
@@ -515,8 +516,6 @@ def multi_collection_lag_bench(
             pipe = CDCStreamPipeline(
                 spark, _lake_dir(c), trigger_seconds=trigger_seconds
             )
-            # in-batch router appends collections from worker threads
-            pipe.ingestor.collection_parallelism = collections
             pipes.append(pipe)
         # start every pipeline BEFORE any producer: streaming queries
         # initialize sequentially (seconds), and events produced into

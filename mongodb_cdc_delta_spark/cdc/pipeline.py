@@ -36,6 +36,8 @@ filter → append, exactly what the 10k events/s/collection target
 
 from __future__ import annotations
 
+import functools
+import logging
 import re
 from dataclasses import dataclass, field
 from enum import Enum
@@ -53,6 +55,8 @@ from pyspark.sql.types import (
 
 from ..schema import MergeMode, cast_to_schema, merge_schemas
 from ..sinks.table import LakeTable
+
+logger = logging.getLogger(__name__)
 
 MAX_DOCUMENT_BYTES = 16 * 1024 * 1024  # MongoDB's 16 MB document cap
 STALE_DAYS_DEFAULT = 7  # spec FR-024 (spec.md:302-305)
@@ -187,6 +191,15 @@ def normalize_extended_json(col):
         r"$1",
     )
     return c
+
+
+def _normalized_doc():
+    """The clean frame's ``doc`` with extended-JSON wrappers unwrapped
+    (the regex pass is skipped for documents without a ``"$`` marker)."""
+    doc = F.col("doc")
+    return F.when(doc.contains('"$'), normalize_extended_json(doc)).otherwise(
+        doc
+    )
 
 
 def _ensure_kafka_columns(raw_df: DataFrame) -> DataFrame:
@@ -548,6 +561,9 @@ class IngestStats:
     #: the table, so without this counter that drift is silent NULL
     #: data loss; with it, governance can alert on the first bad batch.
     type_drift_rows: dict[str, int] = field(default_factory=dict)
+    #: control-plane audit writes that raised (the batch still commits;
+    #: each failure is also logged as a warning)
+    audit_failures: int = 0
 
 
 class CDCIngestor:
@@ -567,9 +583,7 @@ class CDCIngestor:
         materialize_current: bool = False,
         key_col: str = "_id",
         control_plane=None,
-        collection_parallelism: int = 1,
         dlq_max_rows_per_batch: int = 10_000,
-        coalesce_commits: bool = True,
     ):
         import os
 
@@ -578,14 +592,6 @@ class CDCIngestor:
 
         self.spark = spark
         self.lake_root = lake_root
-        #: one write JOB + one txn manifest per same-schema collection
-        #: GROUP instead of one job + one commit per collection — the
-        #: routed-lane headroom fix (r9 verdict #1); per-table behavior
-        #: (txn markers, evolution, stats shape) is identical. Grouping
-        #: applies only where safe: AUTO/STRICT, batch_id set, no
-        #: current-state materialization, no per-table bloom/generated
-        #: properties; everything else falls back per collection.
-        self.coalesce_commits = coalesce_commits
         # roll forward any coalesced txn a previous process left mid-
         # finalize (manifest present ⇒ the batch MUST complete), and
         # sweep stage dirs orphaned by a crash before prepare()
@@ -600,10 +606,6 @@ class CDCIngestor:
         self.circuit_breaker = circuit_breaker
         #: reference dlq_writer rate limit analogue (10k/min → per-batch)
         self.dlq_max_rows_per_batch = dlq_max_rows_per_batch
-        #: >1 routes collections to driver worker threads — each append is
-        #: an independent Spark job on its own table (the reference's
-        #: per-collection batch_processor threads, B2); 1 = serial
-        self.collection_parallelism = collection_parallelism
         #: optional ControlPlane: each ingest batch writes ONE audit entry
         #: (per-collection row/dlq stats as JSON details) — the reference
         #: audits every management op (api/src/routers/admin.py:148-185);
@@ -616,25 +618,22 @@ class CDCIngestor:
         self.materialize_current = materialize_current
         self.key_col = key_col
 
-    def _guarded_append(self, table: LakeTable, rows, **kwargs):
-        """Sink write under retry (transient + schema errors, reference
-        error_handler.py R1 + delta_writer.py:166-201 R3) and an optional
-        circuit breaker (R2)."""
+    def _guarded(self, write):
+        """Run one sink write — a per-collection append or a grouped
+        write — under retry (transient + schema errors, reference
+        error_handler.py R1 + delta_writer.py:166-201 R3) and the
+        optional circuit breaker (R2)."""
         from ..quality.reliability import (
             is_retryable,
             is_schema_error,
             retry_call,
         )
-
-        def write():
-            return table.append(rows, **kwargs)
+        from ..sinks.table import ConcurrentWriteError
 
         def attempt():
             if self.circuit_breaker is not None:
                 return self.circuit_breaker.call(write)
             return write()
-
-        from ..sinks.table import ConcurrentWriteError
 
         return retry_call(
             attempt,
@@ -776,51 +775,9 @@ class CDCIngestor:
             n_clean_by_key = {
                 (r["db"], r["collection"]): r["n_clean"] for r in inferred
             }
-            items = sorted(schemas.items())
-            use_grouped = (
-                self.coalesce_commits
-                and batch_id is not None
-                and self.mode != MergeMode.LOCKED
-                and not self.materialize_current
-                and len(items) > 1
+            results = self._route(
+                clean, sorted(schemas.items()), batch_id, n_clean_by_key
             )
-            if use_grouped:
-                results = self._ingest_grouped(
-                    clean, items, batch_id, n_clean_by_key
-                )
-            elif self.collection_parallelism > 1 and len(items) > 1:
-                # per-collection worker threads (reference batch_processor's
-                # per-collection threading, B2): each collection's append is
-                # an independent Spark job on its own table, so jobs run
-                # concurrently from driver threads; results merge after.
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(
-                    max_workers=self.collection_parallelism
-                ) as pool:
-                    results = list(
-                        pool.map(
-                            lambda kv: self._ingest_collection(
-                                clean,
-                                kv[0],
-                                kv[1],
-                                batch_id,
-                                n_rows_hint=n_clean_by_key.get(kv[0]),
-                            ),
-                            items,
-                        )
-                    )
-            else:
-                results = [
-                    self._ingest_collection(
-                        clean,
-                        key,
-                        sch,
-                        batch_id,
-                        n_rows_hint=n_clean_by_key.get(key),
-                    )
-                    for key, sch in items
-                ]
             for table_name, res, evolved, drift_rows in results:
                 stats.collections[table_name] = res
                 if evolved:
@@ -842,8 +799,9 @@ class CDCIngestor:
                         .limit(self.dlq_max_rows_per_batch)
                     )
                 txn = (dlq_app_id, batch_id) if batch_id is not None else None
-                self._guarded_append(
-                    self.table("_dlq"), dlq, partition_by=[], txn=txn
+                dlq_table = self.table("_dlq")
+                self._guarded(
+                    lambda: dlq_table.append(dlq, partition_by=[], txn=txn)
                 )
         finally:
             parsed.unpersist()
@@ -865,9 +823,61 @@ class CDCIngestor:
                         default=str,
                     ),
                 )
-            except Exception:
-                pass  # audit is best-effort; never fail the data write
+            except Exception as e:
+                # best-effort: the batch is already committed, so a failed
+                # audit write must not fail it — but it must not be silent
+                stats.audit_failures += 1
+                logger.warning(
+                    "ingest_batch %s: audit write failed: %s",
+                    batch_id,
+                    e,
+                    exc_info=True,
+                )
         return stats
+
+    def _typed_rows(
+        self,
+        sub: DataFrame,
+        doc_schema: StructType,
+        parse_schema: StructType,
+        n_rows: int | None,
+        rule=millis_cast_rule,
+        passthrough: dict[str, Any] | None = None,
+    ) -> tuple[DataFrame, StructType]:
+        """The rows one write stores: size-coalesce → extended-JSON
+        normalize → ``from_json`` under ``parse_schema`` → cast onto
+        ``doc_schema`` + CDC metadata (``rule`` resolves millis-longs and,
+        in LOCKED mode, timestamp strings). ``passthrough`` {name: column}
+        rides through parse and cast as trailing string columns (LOCKED's
+        ``__wire`` drift-probe input, a group's ``__route``).
+        Returns (rows, target schema without the passthrough)."""
+        if n_rows is not None:
+            # Right-size the write's tasks. A routed batch fans N
+            # collections out of ONE cached scan, so every slice inherits
+            # the source partition count — at 10 collections x ~30 input
+            # partitions that is ~300 tasks for a 40k-row trigger, and
+            # per-task overhead (not data) dominates batch wall time;
+            # this headroom loss is what breached the routed-lane lag
+            # SLO on a degraded host (r9 verdict #1). ~20k rows per
+            # write task keeps a small slice at ONE task (and one
+            # output file) while a large backlog slice still fans out.
+            want = (n_rows + ROWS_PER_WRITE_TASK - 1) // ROWS_PER_WRITE_TASK
+            sub = sub.coalesce(max(1, want))
+        extra = passthrough or {}
+        parsed_rows = sub.select(
+            F.from_json(_normalized_doc(), parse_schema).alias("d"),
+            *(col.alias(name) for name, col in extra.items()),
+            *CDC_META_COLUMNS,
+        ).select("d.*", *extra, *CDC_META_COLUMNS)
+        meta_fields = [parsed_rows.schema[c] for c in CDC_META_COLUMNS]
+        target = StructType(list(doc_schema.fields) + meta_fields)
+        cast_target = StructType(
+            target.fields + [StructField(n, StringType(), True) for n in extra]
+        )
+        return (
+            cast_to_schema(parsed_rows, cast_target, scalar_rule=rule),
+            target,
+        )
 
     def _ingest_collection(
         self,
@@ -886,78 +896,39 @@ class CDCIngestor:
         sub = clean.where(
             (F.col("db") == db) & (F.col("collection") == coll)
         ).drop("db", "collection")
-        if n_rows_hint is not None:
-            # Right-size this slice's tasks. A routed batch fans N
-            # collections out of ONE cached scan, so every slice inherits
-            # the source partition count — at 10 collections x ~30 input
-            # partitions that is ~300 tasks for a 40k-row trigger, and
-            # per-task overhead (not data) dominates batch wall time;
-            # this headroom loss is what breached the routed-lane lag
-            # SLO on a degraded host (r9 verdict #1). ~20k rows per
-            # write task keeps a small slice at ONE task (and one
-            # output file) while a large backlog slice still fans out.
-            want = (n_rows_hint + ROWS_PER_WRITE_TASK - 1) // (
-                ROWS_PER_WRITE_TASK
-            )
-            sub = sub.coalesce(max(1, want))
         table = self.table(table_name)
         evolved = False
-        live = None if self.mode == MergeMode.LOCKED else table.schema()
+        locked = self.mode == MergeMode.LOCKED
+        live = None if locked else table.schema()
         if live is not None:
             data_schema = StructType(
                 [f for f in live.fields if f.name not in CDC_META_COLUMNS]
             )
             doc_schema = merge_schemas(data_schema, doc_schema, self.mode)
             evolved = doc_schema != data_schema
-        normalized = F.when(
-            F.col("doc").contains('"$'),
-            normalize_extended_json(F.col("doc")),
-        ).otherwise(F.col("doc"))
-        obs = None
-        if self.mode == MergeMode.LOCKED:
-            parsed_rows = sub.select(
-                F.from_json(normalized, parse_schema).alias("d"),
-                normalized.alias("__wire"),
-                *CDC_META_COLUMNS,
-            ).select("d.*", "__wire", *CDC_META_COLUMNS)
-        else:
-            parsed_rows = sub.select(
-                F.from_json(normalized, parse_schema).alias("d"),
-                *CDC_META_COLUMNS,
-            ).select("d.*", *CDC_META_COLUMNS)
-        # millis-longs → timestamps + align to the merged schema; in
-        # LOCKED mode the parse schema read timestamps as strings (wire
-        # form unknown without inference), so the rule also resolves
-        # digit-strings → epoch millis vs ISO literals
-        meta_fields = [parsed_rows.schema[c] for c in CDC_META_COLUMNS]
-        full_target = StructType(list(doc_schema.fields) + meta_fields)
-        rule = (
-            locked_cast_rule
-            if self.mode == MergeMode.LOCKED
-            else millis_cast_rule
+        # LOCKED parses timestamps as strings (wire form unknown without
+        # inference); locked_cast_rule resolves digit-strings → epoch
+        # millis vs ISO literals. ADVICE r6 + r7 review: value-level type
+        # drift in LOCKED mode (wire token present, value nulled by the
+        # pinned-type parse OR by the pinned-type cast — timestamps parse
+        # as strings, so cast-level nulling is the only signal for them)
+        # must not be silent. The raw envelope rides through the cast as
+        # a passthrough column; the probe compares the wire token against
+        # the FINAL post-cast value and sums via observe(), which
+        # piggybacks the metric on the append job itself — zero extra
+        # Spark jobs on the hot path.
+        rows, _ = self._typed_rows(
+            sub,
+            doc_schema,
+            parse_schema,
+            n_rows_hint,
+            rule=locked_cast_rule if locked else millis_cast_rule,
+            passthrough={"__wire": _normalized_doc()} if locked else None,
         )
-        if self.mode == MergeMode.LOCKED:
-            # ADVICE r6 + r7 review: value-level type drift in LOCKED
-            # mode (wire token present, value nulled by the pinned-type
-            # parse OR by the pinned-type cast — timestamps parse as
-            # strings, so cast-level nulling is the only signal for
-            # them) must not be silent. The raw envelope rides through
-            # the cast as a passthrough column; the probe compares the
-            # wire token against the FINAL post-cast value and sums via
-            # observe(), which piggybacks the metric on the append job
-            # itself — zero extra Spark jobs on the hot path. Fields
-            # whose names JSONPath can't address verbatim (dots,
-            # quotes — legal in MongoDB) are skipped from the probe
-            # rather than miscounted.
+        obs = None
+        if locked:
             from pyspark.sql import Observation
 
-            cast_target = StructType(
-                list(full_target.fields)
-                + [StructField("__wire", StringType(), True)]
-            )
-            rows = cast_to_schema(
-                parsed_rows, cast_target, scalar_rule=rule
-            )
             # Allowlist probe-safe names (r7 ADVICE): JSONPath has more
             # metacharacters than the old '.'/quote denylist covered
             # ('[', ']', '*', '$', whitespace — all legal in MongoDB
@@ -990,15 +961,14 @@ class CDCIngestor:
                     ),
                 )
             rows = rows.drop("__wire")
-        else:
-            rows = cast_to_schema(parsed_rows, full_target, scalar_rule=rule)
         txn = (f"cdc-{table_name}", batch_id) if batch_id is not None else None
-        res = self._guarded_append(
-            table,
-            rows,
-            partition_by=self.partition_by,
-            mode=self.mode,
-            txn=txn,
+        res = self._guarded(
+            lambda: table.append(
+                rows,
+                partition_by=self.partition_by,
+                mode=self.mode,
+                txn=txn,
+            )
         )
         # run the __current merge even when the main append was skipped as
         # a duplicate: a retry that crashed between the two commits would
@@ -1034,129 +1004,130 @@ class CDCIngestor:
             except OSError:
                 pass
 
-    def _ingest_grouped(
+    def _route(
         self,
         clean: DataFrame,
         items: list,
-        batch_id: int,
+        batch_id: int | None,
         n_clean_by_key: dict,
     ) -> list[tuple[str, dict, bool, int]]:
-        """Route + append a multi-collection batch with ONE Spark write
-        job and ONE txn manifest per same-schema collection group.
+        """The one ingest write router: append every collection in
+        ``items`` (sorted ``((db, coll), (doc_schema, parse_schema))``).
 
-        The per-collection path costs one driver-scheduled job plus one
-        commit per collection per trigger; at the reference's routed
-        shape (10 collections × 5k ev/s, spec.md:283-288) that driver
-        fan-out — not data volume — capped throughput and breached the
-        lag SLO on a degraded host (r9 verdict #1, BENCH_r09 p50 28.8 s).
-        Here collections whose post-evolution schema agrees are written
-        by a single job partitioned on a ``__route`` column (files land
-        under ``_txn_stage/<txn>/__route=<table>/<hive parts>``), the
-        files are adopted into each table's directory unpublished, and
-        one MultiTableTxn manifest publishes every table's commit with
-        its normal ``cdc-<table>`` marker — so a 10-collection trigger
-        pays ~1 job + 1 manifest + 10 O(1) log appends, crash-atomic by
-        the manifest (recover() rolls forward; sweep reaps pre-manifest
-        orphans). Collections that can't share a job (disagreeing
-        schemas, bloom/generated-column table properties, layout change)
-        fall back to the per-collection append, same batch."""
-        from ..quality.reliability import (
-            is_retryable,
-            is_schema_error,
-            retry_call,
-        )
-        from ..sinks.table import ConcurrentWriteError
-
-        results: list[tuple[str, dict, bool, int]] = []
+        A collection is *grouped* when ``batch_id`` is set, the mode is
+        not LOCKED, ``materialize_current`` is off, and its table has no
+        bloom/generated-column properties, an unchanged partition layout
+        and no committed ``cdc-<table>`` txn at ``batch_id``. Grouped
+        collections whose post-evolution schemas agree, two or more at a
+        time, are written by ONE Spark job and published through ONE
+        MultiTableTxn manifest (``_write_group``): at the reference's
+        routed shape (10 collections × 5k ev/s, spec.md:283-288) one job
+        + one commit per collection per trigger — driver fan-out, not
+        data volume — capped throughput and breached the lag SLO on a
+        degraded host (r9 verdict #1). Every other collection, in order,
+        takes its own ``LakeTable.append`` (``_ingest_collection``), whose
+        txn check reports replays as skipped. A one-collection batch
+        therefore always takes the append path."""
         groups: dict[tuple[str, str], list[dict]] = {}
         singles: list[tuple] = []
-        for key, (doc_schema, parse_schema) in items:
-            db, coll = key
-            table_name = f"{db}_{coll}"
-            table = self.table(table_name)
-            if table.txn_version(f"cdc-{table_name}") >= batch_id:
-                results.append(
-                    (
-                        table_name,
-                        {
-                            "rows": 0,
-                            "files": 0,
-                            "version": table.version(),
-                            "skipped": True,
-                        },
-                        False,
-                        0,
+        groupable = (
+            batch_id is not None
+            and self.mode != MergeMode.LOCKED
+            and not self.materialize_current
+            and len(items) > 1
+        )
+        for key, schemas in items:
+            plan = (
+                self._group_plan(key, schemas, batch_id, n_clean_by_key)
+                if groupable
+                else None
+            )
+            if plan is None:
+                singles.append((key, schemas))
+            else:
+                groups.setdefault(
+                    (plan["doc_schema"].json(), plan["parse_schema"].json()),
+                    [],
+                ).append(plan)
+        results: list[tuple[str, dict, bool, int]] = []
+        for _, members in sorted(groups.items()):
+            if len(members) == 1:
+                singles.append((members[0]["key"], members[0]["schemas"]))
+                continue
+            results.extend(
+                self._guarded(
+                    functools.partial(
+                        self._write_group, clean, members, batch_id
                     )
                 )
-                continue
-            snap = table._replay()
-            if (snap.files and list(snap.partition_by) != self.partition_by) or (
-                table.properties().get("bloom.filter.columns")
-                or table._generated_columns()
-            ):
-                # layout change (append's error message applies) or
-                # per-table write options a shared job can't honor
-                singles.append((key, (doc_schema, parse_schema)))
-                continue
-            evolved = False
-            if snap.schema is not None:
-                data_schema = StructType(
-                    [
-                        f
-                        for f in snap.schema.fields
-                        if f.name not in CDC_META_COLUMNS
-                    ]
-                )
-                doc_schema = merge_schemas(data_schema, doc_schema, self.mode)
-                evolved = doc_schema != data_schema
-            plan = {
-                "key": key,
-                "table_name": table_name,
-                "doc_schema": doc_schema,
-                "parse_schema": parse_schema,
-                "evolved": evolved,
-                "n": int(n_clean_by_key.get(key, 0)),
-            }
-            groups.setdefault(
-                (doc_schema.json(), parse_schema.json()), []
-            ).append(plan)
-        for gkey, members in sorted(groups.items()):
-            if len(members) == 1:
-                m = members[0]
-                singles.append((m["key"], (m["doc_schema"], m["parse_schema"])))
-                continue
-
-            def run_group(members=members):
-                return self._write_group(clean, members, batch_id)
-
-            results.extend(
-                retry_call(
-                    run_group,
-                    self.retry_config,
-                    retry_if=lambda e: isinstance(e, ConcurrentWriteError)
-                    or is_retryable(e)
-                    or is_schema_error(e),
-                )
             )
-        for key, sch in singles:
+        for key, schemas in singles:
             results.append(
                 self._ingest_collection(
                     clean,
                     key,
-                    sch,
+                    schemas,
                     batch_id,
                     n_rows_hint=n_clean_by_key.get(key),
                 )
             )
         return results
 
+    def _group_plan(
+        self, key, schemas, batch_id: int, n_clean_by_key: dict
+    ) -> dict | None:
+        """One collection's grouped-write plan, or None when its table
+        can't share a job: its txn is already committed (a replay), its
+        partition layout changes (append's error message applies), or it
+        carries per-table write options (bloom filter, generated
+        columns) a shared job can't honor."""
+        db, coll = key
+        doc_schema, parse_schema = schemas
+        table_name = f"{db}_{coll}"
+        table = self.table(table_name)
+        if table.txn_version(f"cdc-{table_name}") >= batch_id:
+            return None
+        snap = table._replay()
+        if (snap.files and list(snap.partition_by) != self.partition_by) or (
+            table.properties().get("bloom.filter.columns")
+            or table._generated_columns()
+        ):
+            return None
+        evolved = False
+        if snap.schema is not None:
+            data_schema = StructType(
+                [
+                    f
+                    for f in snap.schema.fields
+                    if f.name not in CDC_META_COLUMNS
+                ]
+            )
+            doc_schema = merge_schemas(data_schema, doc_schema, self.mode)
+            evolved = doc_schema != data_schema
+        return {
+            "key": key,
+            "schemas": schemas,
+            "table_name": table_name,
+            "doc_schema": doc_schema,
+            "parse_schema": parse_schema,
+            "evolved": evolved,
+            "n": int(n_clean_by_key.get(key, 0)),
+        }
+
     def _write_group(
         self, clean: DataFrame, members: list[dict], batch_id: int
     ) -> list[tuple[str, dict, bool, int]]:
         """One grouped write attempt: job → adopt files → manifest commit.
-        Retried whole by _ingest_grouped; files from a failed attempt are
-        unpublished orphans (vacuum's orphan sweep / stage sweep reap)."""
+        The job is partitioned on a ``__route`` column (files land under
+        ``_txn_stage/<txn>/__route=<table>/<hive parts>``), the files are
+        adopted into each table's directory unpublished, and the manifest
+        publishes every table's commit with its normal ``cdc-<table>``
+        marker — crash-atomic by the manifest (recover() rolls forward;
+        the stage sweep reaps pre-manifest orphans). Retried whole by
+        ``_guarded``; files from a failed attempt are unpublished orphans
+        (vacuum's orphan sweep / stage sweep reap)."""
         import os
+        import shutil
         import uuid
         from urllib.parse import unquote
 
@@ -1165,31 +1136,15 @@ class CDCIngestor:
         from ..sinks.table import _collect_file_stats
         from ..sinks.txn import MultiTableTxn
 
-        parse_schema = members[0]["parse_schema"]
-        doc_schema = members[0]["doc_schema"]
         names = [m["table_name"] for m in members]
         total = sum(m["n"] for m in members)
         route = F.concat(F.col("db"), F.lit("_"), F.col("collection"))
-        sub = clean.where(route.isin(names)).coalesce(
-            max(1, (total + ROWS_PER_WRITE_TASK - 1) // ROWS_PER_WRITE_TASK)
-        )
-        normalized = F.when(
-            F.col("doc").contains('"$'),
-            normalize_extended_json(F.col("doc")),
-        ).otherwise(F.col("doc"))
-        parsed_rows = sub.select(
-            F.from_json(normalized, parse_schema).alias("d"),
-            route.alias("__route"),
-            *CDC_META_COLUMNS,
-        ).select("d.*", "__route", *CDC_META_COLUMNS)
-        meta_fields = [parsed_rows.schema[c] for c in CDC_META_COLUMNS]
-        full_target = StructType(list(doc_schema.fields) + meta_fields)
-        cast_target = StructType(
-            list(full_target.fields)
-            + [StructField("__route", StringType(), False)]
-        )
-        rows = cast_to_schema(
-            parsed_rows, cast_target, scalar_rule=millis_cast_rule
+        rows, full_target = self._typed_rows(
+            clean.where(route.isin(names)),
+            members[0]["doc_schema"],
+            members[0]["parse_schema"],
+            total,
+            passthrough={"__route": route},
         )
         txn_id = uuid.uuid4().hex
         stage = os.path.join(self._txn_stage_dir, txn_id)
@@ -1244,8 +1199,6 @@ class CDCIngestor:
                             "stats": _collect_file_stats(dst),
                         }
                     )
-        import shutil
-
         shutil.rmtree(stage, ignore_errors=True)
         txn = MultiTableTxn(
             self.spark, self._txn_dir, app_id="cdc", version=batch_id
@@ -1397,9 +1350,10 @@ class CDCIngestor:
         duration) at none of its per-row Python cost (measured 4.3x on
         the scan), provenance (db, collection) joins in from the
         discovery listing by file path, and ALL collections ingest as
-        one routed batch (P6), so per-collection appends run under
-        ``collection_parallelism`` threads instead of serializing one
-        ingest_batch per collection. ``reader="python"`` keeps the
+        one routed batch (P6): with a ``batch_id``, same-schema
+        collections share one write job and one txn manifest (see
+        ``_route``) instead of one ingest_batch per collection.
+        ``reader="python"`` keeps the
         portable ``format("mongodump")`` DataSource, one
         ``snapshot_load`` per collection (see cdc/mongodump.py).
 

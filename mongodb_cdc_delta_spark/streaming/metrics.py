@@ -52,6 +52,8 @@ class PipelineMetricsListener(StreamingQueryListener):
         self.lag_warn_s = lag_warn_s
         self.lag_crit_s = lag_crit_s
         self.by_query: dict[str, PipelineMetrics] = {}
+        #: runId/id → query name: a termination event carries ids only
+        self._names: dict[str, str] = {}
 
     def _metrics(self, name: str) -> PipelineMetrics:
         return self.by_query.setdefault(name or "<unnamed>", PipelineMetrics())
@@ -60,6 +62,8 @@ class PipelineMetricsListener(StreamingQueryListener):
 
     def onQueryStarted(self, event) -> None:  # noqa: N802
         self._metrics(event.name)
+        for qid in (event.runId, event.id):
+            self._names[str(qid)] = event.name
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = event.progress
@@ -91,8 +95,12 @@ class PipelineMetricsListener(StreamingQueryListener):
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         if getattr(event, "exception", None):
-            for m in self.by_query.values():
-                m.failures_total += 1
+            # charge only the query that failed (runId first: a restarted
+            # query keeps its id but gets a fresh runId)
+            name = self._names.get(
+                str(event.runId), self._names.get(str(event.id))
+            )
+            self._metrics(name).failures_total += 1
 
     def onQueryIdle(self, event) -> None:  # noqa: N802
         pass

@@ -295,7 +295,7 @@ class TestDLQReplay:
         clean, dlq = parse_events(
             raw_df(spark, [ok_doc]), max_doc_bytes=50
         )
-        small_cap._guarded_append(small_cap.table("_dlq"), dlq, partition_by=[])
+        small_cap.table("_dlq").append(dlq, partition_by=[])
         assert small_cap.table("_dlq").read().count() == 1
 
         stats = small_cap.replay_dlq(batch_id=99)
@@ -510,35 +510,6 @@ class TestAuditWriteThrough:
         details = _json.loads(row["details"])
         assert details["batch_id"] == 0
         assert "shop_users" in details["collections"]
-
-
-class TestParallelCollections:
-    def test_parallel_matches_serial(self, spark, tmp_path):
-        events = []
-        for coll in ("users", "orders", "items", "carts"):
-            for i in range(5):
-                events.append(
-                    envelope("c", coll=coll, after={"_id": f"{coll}{i}", "n": i})
-                )
-        serial = CDCIngestor(spark, str(tmp_path / "s"))
-        s_stats = serial.ingest_batch(raw_df(spark, events), batch_id=0, now=NOW)
-        par = CDCIngestor(
-            spark, str(tmp_path / "p"), collection_parallelism=4
-        )
-        p_stats = par.ingest_batch(raw_df(spark, events), batch_id=0, now=NOW)
-        assert set(s_stats.collections) == set(p_stats.collections)
-        for name in s_stats.collections:
-            assert (
-                s_stats.collections[name]["rows"]
-                == p_stats.collections[name]["rows"]
-                == 5
-            )
-            a = serial.table(name).read().orderBy("_id").collect()
-            b = par.table(name).read().orderBy("_id").collect()
-            assert [r["_id"] for r in a] == [r["_id"] for r in b]
-        # replay is still exactly-once per table under parallelism
-        p2 = par.ingest_batch(raw_df(spark, events), batch_id=0, now=NOW)
-        assert all(r["skipped"] for r in p2.collections.values())
 
 
 class TestDLQRateGuard:

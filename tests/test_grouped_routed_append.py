@@ -3,7 +3,8 @@ written by ONE Spark job per same-schema collection group and published
 through ONE MultiTableTxn manifest with the normal per-table
 ``cdc-<table>`` markers. These tests pin:
 
-- content parity: grouped output is identical to the per-collection path
+- content parity: grouped output is identical to the per-collection
+  append path, taken by ingesting each collection as its own batch
   (same rows, same typing, same per-collection stats shape);
 - group splitting: a collection whose post-evolution schema disagrees
   falls back without contaminating the shared job;
@@ -62,20 +63,21 @@ COLLS = ["c0", "c1", "c2", "c3"]
 class TestGroupedParity:
     def test_grouped_matches_per_collection_path(self, spark, tmp_path):
         raw = _batch(spark, COLLS)
-        g = CDCIngestor(spark, str(tmp_path / "lake_g"), coalesce_commits=True)
-        p = CDCIngestor(
-            spark, str(tmp_path / "lake_p"), coalesce_commits=False
-        )
-        g.collection_parallelism = 4
-        p.collection_parallelism = 4
+        g = CDCIngestor(spark, str(tmp_path / "lake_g"))
+        p = CDCIngestor(spark, str(tmp_path / "lake_p"))
         st_g = g.ingest_batch(raw, batch_id=1)
-        st_p = p.ingest_batch(raw, batch_id=1)
-        assert set(st_g.collections) == set(st_p.collections) == {
+        # reference: one single-collection batch per collection, which
+        # takes the per-collection LakeTable.append path
+        p_colls = {}
+        for c in COLLS:
+            st = p.ingest_batch(_batch(spark, [c]), batch_id=1)
+            p_colls.update(st.collections)
+        assert set(st_g.collections) == set(p_colls) == {
             f"shop_{c}" for c in COLLS
         }
         for t in st_g.collections:
             assert st_g.collections[t]["rows"] == 50
-            assert st_g.collections[t]["rows"] == st_p.collections[t]["rows"]
+            assert st_g.collections[t]["rows"] == p_colls[t]["rows"]
             assert not st_g.collections[t]["skipped"]
             assert _data_rows(g, t) == _data_rows(p, t)
             # identical lake schema from both paths

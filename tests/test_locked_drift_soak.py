@@ -2,9 +2,10 @@
 
 The type-drift counter rides ``DataFrame.observe`` — a listener-based
 metric — under exactly the conditions where listener metrics break:
-per-collection driver worker threads (collection_parallelism > 1), DLQ
-poison in the same batch, duplicate-batch replays (skipped txns must
-not read an unfired observation), and multi-collection routing. This
+several per-collection appends in one batch (LOCKED multi-collection
+batches append serially, one observation per append), DLQ poison in
+the same batch, duplicate-batch replays (skipped txns must not read an
+unfired observation), and multi-collection routing. This
 soak generates ~25 seeded random batches over 5 collections with a
 KNOWN per-collection drift count per batch and asserts, every batch:
 
@@ -73,9 +74,7 @@ def test_locked_drift_soak(spark, tmp_path):
             seq += 1
     boot.ingest_batch(spark.createDataFrame(rows, "value string"), batch_id=0)
 
-    locked = CDCIngestor(
-        spark, root, mode=MergeMode.LOCKED, collection_parallelism=3
-    )
+    locked = CDCIngestor(spark, root, mode=MergeMode.LOCKED)
 
     # ledger[coll] = [total_rows, null_n_rows]
     ledger = {c: [4, 0] for c in COLLS}
