@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries import load, register, spread
+from ._hash import bucket_duckdb
 
 CHUNK = 64
 STRIDE = 48
@@ -335,7 +336,7 @@ def fuzzy_levenshtein_pairs_guarded(
 
 @register(
     "corpus_prep_pipeline",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents
     ), b AS (
@@ -359,10 +360,8 @@ def fuzzy_levenshtein_pairs_guarded(
       SELECT d.doc_id, d.text FROM documents d
       JOIN ok USING (doc_id) JOIN keep USING (doc_id)
     )
-    SELECT CASE WHEN ((((doc_id % 100003) * 2654435761 + 7919)
-                      % 2147483648) % 10000) < 500 THEN 'val'
-                WHEN ((((doc_id % 100003) * 2654435761 + 7919)
-                      % 2147483648) % 10000) < 1000 THEN 'test'
+    SELECT CASE WHEN {bucket_duckdb('doc_id')} < 500 THEN 'val'
+                WHEN {bucket_duckdb('doc_id')} < 1000 THEN 'test'
                 ELSE 'train' END AS split,
            count(*) AS n_docs,
            CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens

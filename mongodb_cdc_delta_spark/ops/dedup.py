@@ -38,6 +38,20 @@ from ..queries import load, register, spread
 from ._cache import cache_scoped as _cache_scoped
 from ._cache import release_all_caches as release_dedup_caches  # noqa: F401
 from ._cache import scoped_cache as _scoped_cache
+from ._hash import (
+    AFFINE_COEFFS,
+    MINHASH_COEFFS,
+    B,
+    P,
+    bucket_duckdb,
+    bucket_spark,
+    codes_duckdb,
+    codes_spark,
+    poly_duckdb,
+    poly_duckdb_codes,
+    poly_spark,
+    values_duckdb,
+)
 
 # ---------------------------------------------------------------------------
 # exact + normalized dedup (oracle-checked: md5 is identical across engines)
@@ -519,12 +533,6 @@ def ngram_jaccard_pairs(
 _INC_NEW_BUCKET = 9_000
 
 
-def _inc_bucket_sql(key: str) -> str:
-    # mirrors ops/sampling._BUCKET_SQL parameterized by key column
-    # (DuckDB has no pmod; plain % is identical for non-negative keys)
-    return f"(((({key} % 100003) * 2654435761 + 7919) % 2147483648) % 10000)"
-
-
 #: CTE chain producing ``ipairs`` (doc_a = new doc, doc_b = partner,
 #: pair_class in ('new_existing', 'new_new')) — shared by the pair report
 #: and the keep/drop decision oracle below
@@ -532,15 +540,15 @@ _INC_PAIRS_CTES = f"""{_SHINGLE_CTES},
     inter AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
       FROM sh a JOIN sh b ON a.shingle = b.shingle
-      WHERE {_inc_bucket_sql('a.doc_id')} >= {_INC_NEW_BUCKET}
+      WHERE {bucket_duckdb('a.doc_id')} >= {_INC_NEW_BUCKET}
         AND a.doc_id <> b.doc_id
-        AND ({_inc_bucket_sql('b.doc_id')} < {_INC_NEW_BUCKET}
+        AND ({bucket_duckdb('b.doc_id')} < {_INC_NEW_BUCKET}
              OR a.doc_id < b.doc_id)
       GROUP BY 1, 2
     ),
     ipairs AS (
       SELECT doc_a, doc_b,
-             CASE WHEN {_inc_bucket_sql('doc_b')} >= {_INC_NEW_BUCKET}
+             CASE WHEN {bucket_duckdb('doc_b')} >= {_INC_NEW_BUCKET}
                   THEN 'new_new' ELSE 'new_existing' END AS pair_class
       FROM inter
       JOIN sizes sa ON sa.doc_id = doc_a
@@ -571,15 +579,13 @@ def _incremental_jaccard_pairs(
     pair materializes, so the guard is increment-aware: a corpus whose
     ALL-PAIRS space is over budget still runs when its increment's pair
     space is within it."""
-    from .sampling import sample_bucket
-
     from pyspark.sql import Window
 
     sh = shingles(docs, n=n).select(
         "doc_id", F.xxhash64("shingle").alias("sh")
     )
     sh = sh.withColumn(
-        "is_new", sample_bucket(F.col("doc_id")) >= _INC_NEW_BUCKET
+        "is_new", bucket_spark(F.col("doc_id")) >= _INC_NEW_BUCKET
     )
     # r10 OPT (guide §1.2/§2.4, same rewrite as _jaccard_pair_counts):
     # per-shingle (df, df_new) via ONE window exchange over the scoped-
@@ -651,7 +657,7 @@ def _incremental_jaccard_pairs(
             "doc_a",
             "doc_b",
             F.when(
-                sample_bucket(F.col("doc_b")) >= _INC_NEW_BUCKET,
+                bucket_spark(F.col("doc_b")) >= _INC_NEW_BUCKET,
                 F.lit("new_new"),
             )
             .otherwise(F.lit("new_existing"))
@@ -723,7 +729,7 @@ def dedup_incremental_pairs(spark: SparkSession, sf: str) -> DataFrame:
     WITH {_INC_PAIRS_CTES},
     newdocs AS (
       SELECT doc_id FROM documents
-      WHERE {_inc_bucket_sql('doc_id')} >= {_INC_NEW_BUCKET}
+      WHERE {bucket_duckdb('doc_id')} >= {_INC_NEW_BUCKET}
     ),
     drop_exist AS (
       SELECT DISTINCT doc_a AS doc_id FROM ipairs
@@ -755,13 +761,11 @@ def dedup_incremental_pairs(spark: SparkSession, sf: str) -> DataFrame:
     tags=("dedup", "llm-pipeline", "report"),
 )
 def dedup_incremental_keep(spark: SparkSession, sf: str) -> DataFrame:
-    from .sampling import sample_bucket
-
     docs = load(spark, sf, "documents")
     p = _incremental_jaccard_pairs(docs)
     p = _scoped_cache(p)
     newdocs = docs.where(
-        sample_bucket(F.col("doc_id")) >= _INC_NEW_BUCKET
+        bucket_spark(F.col("doc_id")) >= _INC_NEW_BUCKET
     ).select("doc_id")
     de = (
         p.where(F.col("pair_class") == "new_existing")
@@ -1162,11 +1166,6 @@ def dedup_cluster_profile(spark: SparkSession, sf: str) -> DataFrame:
 # validated against exact Jaccard in tests/test_dedup.py)
 # ---------------------------------------------------------------------------
 
-# 31-bit Mersenne prime: a*x stays under 2^62, so the affine transform never
-# overflows a long (Spark 4 runs ANSI mode — overflow would raise, not wrap)
-_MERSENNE = (1 << 31) - 1
-
-
 def minhash_signatures(
     sh: DataFrame, num_hashes: int = 32, seed: int = 7
 ) -> DataFrame:
@@ -1176,11 +1175,11 @@ def minhash_signatures(
 
     rnd = random.Random(seed)
     coeffs = [
-        (rnd.randrange(1, _MERSENNE), rnd.randrange(0, _MERSENNE))
+        (rnd.randrange(1, P), rnd.randrange(0, P))
         for _ in range(num_hashes)
     ]
     return _minhash_from_base(
-        sh, F.pmod(F.xxhash64("shingle"), F.lit(_MERSENNE)), coeffs
+        sh, F.pmod(F.xxhash64("shingle"), F.lit(P)), coeffs
     )
 
 
@@ -1196,18 +1195,18 @@ def minhash_signatures_from_hashes(
 
     rnd = random.Random(seed)
     coeffs = [
-        (rnd.randrange(1, _MERSENNE), rnd.randrange(0, _MERSENNE))
+        (rnd.randrange(1, P), rnd.randrange(0, P))
         for _ in range(num_hashes)
     ]
     return _minhash_from_base(
-        hashed, F.pmod(F.col("sh"), F.lit(_MERSENNE)), coeffs
+        hashed, F.pmod(F.col("sh"), F.lit(P)), coeffs
     )
 
 
 def _minhash_from_base(sh: DataFrame, base, coeffs) -> DataFrame:
     mins = [
         F.min(
-            F.pmod(F.lit(a) * base + F.lit(b), F.lit(_MERSENNE))
+            F.pmod(F.lit(a) * base + F.lit(b), F.lit(P))
         ).alias(f"h{i}")
         for i, (a, b) in enumerate(coeffs)
     ]
@@ -1547,11 +1546,10 @@ def decontaminate_flags(
 
 @register(
     "decontaminate_train_set",
-    oracle="""
+    oracle=f"""
     WITH bucketed AS (
       SELECT doc_id, text,
-             ((((doc_id % 100003) * 2654435761 + 7919) % 2147483648)
-              % 10000) AS bucket
+             {bucket_duckdb('doc_id')} AS bucket
       FROM documents
     ),
     ev_sh AS (
@@ -1580,10 +1578,8 @@ def decontaminate_flags(
     tags=("dedup", "llm-pipeline", "decontamination"),
 )
 def decontaminate_train_set(spark: SparkSession, sf: str) -> DataFrame:
-    from .sampling import sample_bucket
-
     docs = load(spark, sf, "documents")
-    bucket = sample_bucket(F.col("doc_id"))
+    bucket = bucket_spark(F.col("doc_id"))
     eval_set = docs.where(bucket < 200)
     train = docs.where(bucket >= 200)
     return decontaminate_flags(train, eval_set, n=3)
@@ -1640,11 +1636,10 @@ def containment_scores(
 
 @register(
     "decontaminate_containment",
-    oracle="""
+    oracle=f"""
     WITH bucketed AS (
       SELECT doc_id, text,
-             ((((doc_id % 100003) * 2654435761 + 7919) % 2147483648)
-              % 10000) AS bucket
+             {bucket_duckdb('doc_id')} AS bucket
       FROM documents
     ),
     ev AS (
@@ -1690,10 +1685,8 @@ def containment_scores(
     tags=("dedup", "llm-pipeline", "decontamination"),
 )
 def decontaminate_containment(spark: SparkSession, sf: str) -> DataFrame:
-    from .sampling import sample_bucket
-
     docs = load(spark, sf, "documents")
-    bucket = sample_bucket(F.col("doc_id"))
+    bucket = bucket_spark(F.col("doc_id"))
     scores = containment_scores(
         docs.where(bucket >= 200), docs.where(bucket < 200), n=3
     )
@@ -1777,8 +1770,7 @@ def exact_substring_flags(
     oracle=f"""
     WITH bucketed AS (
       SELECT doc_id, text,
-             ((((doc_id % 100003) * 2654435761 + 7919) % 2147483648)
-              % 10000) AS bucket
+             {bucket_duckdb('doc_id')} AS bucket
       FROM documents
     ),
     ev AS (
@@ -1805,10 +1797,8 @@ def exact_substring_flags(
     tags=("dedup", "llm-pipeline", "decontamination"),
 )
 def decontaminate_exact_substring(spark: SparkSession, sf: str) -> DataFrame:
-    from .sampling import sample_bucket
-
     docs = load(spark, sf, "documents")
-    bucket = sample_bucket(F.col("doc_id"))
+    bucket = bucket_spark(F.col("doc_id"))
     eval_set = docs.where(bucket < 200)
     train = docs.where(bucket >= 200)
     return exact_substring_flags(train, eval_set)
@@ -2036,8 +2026,7 @@ def cut_contaminated_spans(
     oracle=f"""
     WITH bucketed AS (
       SELECT doc_id, text,
-             ((((doc_id % 100003) * 2654435761 + 7919) % 2147483648)
-              % 10000) AS bucket
+             {bucket_duckdb('doc_id')} AS bucket
       FROM documents
     ),
     ev AS (
@@ -2089,10 +2078,8 @@ def cut_contaminated_spans(
     tags=("dedup", "llm-pipeline", "decontamination"),
 )
 def decontaminate_suffix_runs(spark: SparkSession, sf: str) -> DataFrame:
-    from .sampling import sample_bucket
-
     docs = load(spark, sf, "documents")
-    bucket = sample_bucket(F.col("doc_id"))
+    bucket = bucket_spark(F.col("doc_id"))
     eval_set = docs.where(bucket < 200)
     train = docs.where(bucket >= 200)
     return suffix_run_flags(train, eval_set)
@@ -2156,8 +2143,7 @@ def doc_novelty_fraction(spark: SparkSession, sf: str) -> DataFrame:
     oracle=f"""
     WITH bucketed AS (
       SELECT doc_id, text,
-             ((((doc_id % 100003) * 2654435761 + 7919) % 2147483648)
-              % 10000) AS bucket
+             {bucket_duckdb('doc_id')} AS bucket
       FROM documents
     ),
     ev AS (
@@ -2208,10 +2194,8 @@ def doc_novelty_fraction(spark: SparkSession, sf: str) -> DataFrame:
     tags=("dedup", "llm-pipeline", "decontamination"),
 )
 def contamination_eval_report(spark: SparkSession, sf: str) -> DataFrame:
-    from .sampling import sample_bucket
-
     docs = load(spark, sf, "documents")
-    bucket = sample_bucket(F.col("doc_id"))
+    bucket = bucket_spark(F.col("doc_id"))
     eval_set = docs.where(bucket < 200)
     train = docs.where(bucket >= 200)
     runs = _suffix_islands(train, eval_set, _SR_L)
@@ -2228,8 +2212,7 @@ def contamination_eval_report(spark: SparkSession, sf: str) -> DataFrame:
     oracle=f"""
     WITH bucketed AS (
       SELECT doc_id, text,
-             ((((doc_id % 100003) * 2654435761 + 7919) % 2147483648)
-              % 10000) AS bucket
+             {bucket_duckdb('doc_id')} AS bucket
       FROM documents
     ),
     ev AS (
@@ -2325,10 +2308,8 @@ def contamination_eval_report(spark: SparkSession, sf: str) -> DataFrame:
     tags=("dedup", "llm-pipeline", "decontamination"),
 )
 def decontaminate_cut_spans(spark: SparkSession, sf: str) -> DataFrame:
-    from .sampling import sample_bucket
-
     docs = load(spark, sf, "documents")
-    bucket = sample_bucket(F.col("doc_id"))
+    bucket = bucket_spark(F.col("doc_id"))
     eval_set = docs.where(bucket < 200)
     train = docs.where(bucket >= 200)
     return cut_contaminated_spans(train, eval_set)
@@ -2342,9 +2323,8 @@ _WK = 14  # gram length (chars)
 _WW = 7  # winnowing window (grams)
 _W_MAXDF = 10  # drop fingerprints present in more docs (hot-phrase cap)
 _W_MINSHARE = 5  # report pairs sharing at least this many fingerprints
-
-_POLY_P = 2147483647  # modulus (2^31-1); products stay under 2^62 (ANSI)
-_POLY_B = 131
+#: DuckDB: the fold of the _WK-char gram of code list ``cs`` at ``i``
+_GRAM_POLY_SQL = poly_duckdb_codes(f"cs[i:i + {_WK - 1}]")
 
 
 def _poly_gram_hashes(pre: DataFrame, k: int) -> DataFrame:
@@ -2366,14 +2346,10 @@ def _poly_gram_hashes(pre: DataFrame, k: int) -> DataFrame:
     def comb(a: str, b: str, b_span_pow: int, sh: int) -> str:
         return (
             f"zip_with({a}, {shift(b, sh)},"
-            f" (x, y) -> (x * {b_span_pow} + y) % {_POLY_P})"
+            f" (x, y) -> (x * {b_span_pow} + y) % {P})"
         )
 
-    codes = (
-        "transform(sequence(1, length(text)),"
-        " i -> cast(ascii(substring(text, i, 1)) as bigint))"
-    )
-    hdf = pre.select("doc_id", F.expr(codes).alias("h1"))
+    hdf = pre.select("doc_id", F.expr(codes_spark("text")).alias("h1"))
     spans = [1]
     m = 1
     while 2 * m <= k:
@@ -2381,7 +2357,7 @@ def _poly_gram_hashes(pre: DataFrame, k: int) -> DataFrame:
             "doc_id",
             *[f"h{s}" for s in spans],
             F.expr(
-                comb(f"h{m}", f"h{m}", pow(_POLY_B, m, _POLY_P), m)
+                comb(f"h{m}", f"h{m}", pow(B, m, P), m)
             ).alias(f"h{2 * m}"),
         )
         m *= 2
@@ -2391,7 +2367,7 @@ def _poly_gram_hashes(pre: DataFrame, k: int) -> DataFrame:
     rest = k - m
     for s in reversed(spans[:-1]):
         if rest >= s:
-            acc = comb(acc, f"h{s}", pow(_POLY_B, s, _POLY_P), acc_span)
+            acc = comb(acc, f"h{s}", pow(B, s, P), acc_span)
             acc_span += s
             rest -= s
     assert rest == 0 and acc_span == k
@@ -2518,15 +2494,12 @@ def winnow_dup_pairs(
     oracle=f"""
     WITH codes AS (
       SELECT doc_id,
-             list_transform(generate_series(1, len(text)),
-                            i -> CAST(ascii(text[i]) AS BIGINT)) AS cs
+             {codes_duckdb('text')} AS cs
       FROM documents WHERE len(text) >= {_WK + _WW - 1}
     ), hs AS (
       SELECT doc_id,
              list_transform(generate_series(1, len(cs) - {_WK - 1}),
-               i -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-                                             cs[i:i + {_WK - 1}]),
-                                (a, c) -> (a * 131 + c) % 2147483647)) AS h
+               i -> {_GRAM_POLY_SQL}) AS h
       FROM codes
     ), fps0 AS (
       SELECT doc_id,
@@ -2653,15 +2626,12 @@ def dup_spans(
     oracle=f"""
     WITH codes AS (
       SELECT doc_id,
-             list_transform(generate_series(1, len(text)),
-                            i -> CAST(ascii(text[i]) AS BIGINT)) AS cs
+             {codes_duckdb('text')} AS cs
       FROM documents WHERE len(text) >= {_WK + _WW - 1}
     ), hs AS (
       SELECT doc_id,
              list_transform(generate_series(1, len(cs) - {_WK - 1}),
-               i -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-                                             cs[i:i + {_WK - 1}]),
-                                (a, c) -> (a * 131 + c) % 2147483647)) AS h
+               i -> {_GRAM_POLY_SQL}) AS h
       FROM codes
     ), fps0 AS (
       SELECT doc_id,
@@ -2727,16 +2697,6 @@ def dedup_span_extract(spark: SparkSession, sf: str) -> DataFrame:
 # Portable MinHash+LSH (fully oracle-checked: engine-reproducible hashes)
 # ---------------------------------------------------------------------------
 
-# fixed affine permutation coefficients (seeded once, inlined into BOTH
-# engines so signatures agree bit-for-bit)
-_MH_PORTABLE_COEFFS = [(2075443165, 1671098287), (946466064, 250934579), (16087819, 194655650), (1956305977, 2024077985), (2017064809, 1733024478), (1250324205, 75003370), (1442171594, 1488393902), (180255972, 211359734), (1646005276, 761574164), (508545125, 37426449), (66172593, 2118896851), (1693876517, 34017048), (743220394, 1392248069), (1338486782, 1039910182), (1322454143, 995461690), (319018672, 196037792), (393184162, 1532036568), (245699978, 1815372135), (31393588, 1080363995), (1045290968, 1890795832), (2072110336, 536501702), (138646444, 1432920372), (1161978031, 1959181850), (1000509548, 147251335), (1291632927, 1449824051), (190973210, 1106050643), (1243398801, 98709773), (578930450, 1770346149), (1194929836, 135458290), (1384341475, 649461447), (1033017744, 1825744134), (762870257, 572206129)]
-
-_SHINGLE_POLY = (
-    "aggregate(transform(sequence(1, length(shingle)),"
-    " i -> cast(ascii(substring(shingle, i, 1)) as bigint)),"
-    " 0L, (a, c) -> (a * 131 + c) % 2147483647)"
-)
-
 
 @_cache_scoped
 def _portable_sigs_cands(docs: DataFrame):
@@ -2744,13 +2704,13 @@ def _portable_sigs_cands(docs: DataFrame):
     32-perm signatures (cached — feeds banding AND per-pair estimate),
     and the 8x4-banded LSH candidate pairs. Returns (sh, sigs, cand)."""
     sh = shingles(docs, n=3).select(
-        "doc_id", F.expr(_SHINGLE_POLY).alias("ph")
+        "doc_id", F.expr(poly_spark("shingle")).alias("ph")
     )
     mins = [
-        F.min((F.lit(a) * F.col("ph") + F.lit(b)) % F.lit(_MERSENNE)).alias(
+        F.min((F.lit(a) * F.col("ph") + F.lit(b)) % F.lit(P)).alias(
             f"h{i}"
         )
-        for i, (a, b) in enumerate(_MH_PORTABLE_COEFFS)
+        for i, (a, b) in enumerate(MINHASH_COEFFS)
     ]
     sigs = _scoped_cache(sh.groupBy("doc_id").agg(*mins))
     band_keys = F.array(
@@ -2785,40 +2745,9 @@ def _portable_sigs_cands(docs: DataFrame):
 #: shingles, polynomial hash, 32-perm signatures, 8x4 band keys and the
 #: LSH candidate pairs. Extended by dedup_minhash_lsh_portable (estimate
 #: + threshold) and minhash_estimate_error (estimate vs exact Jaccard).
-_MH_PORTABLE_PREFIX_SQL = """
+_MH_PORTABLE_PREFIX_SQL = f"""
     WITH coeffs(i, a, b) AS (VALUES
-      (0, 2075443165, 1671098287),
-      (1, 946466064, 250934579),
-      (2, 16087819, 194655650),
-      (3, 1956305977, 2024077985),
-      (4, 2017064809, 1733024478),
-      (5, 1250324205, 75003370),
-      (6, 1442171594, 1488393902),
-      (7, 180255972, 211359734),
-      (8, 1646005276, 761574164),
-      (9, 508545125, 37426449),
-      (10, 66172593, 2118896851),
-      (11, 1693876517, 34017048),
-      (12, 743220394, 1392248069),
-      (13, 1338486782, 1039910182),
-      (14, 1322454143, 995461690),
-      (15, 319018672, 196037792),
-      (16, 393184162, 1532036568),
-      (17, 245699978, 1815372135),
-      (18, 31393588, 1080363995),
-      (19, 1045290968, 1890795832),
-      (20, 2072110336, 536501702),
-      (21, 138646444, 1432920372),
-      (22, 1161978031, 1959181850),
-      (23, 1000509548, 147251335),
-      (24, 1291632927, 1449824051),
-      (25, 190973210, 1106050643),
-      (26, 1243398801, 98709773),
-      (27, 578930450, 1770346149),
-      (28, 1194929836, 135458290),
-      (29, 1384341475, 649461447),
-      (30, 1033017744, 1825744134),
-      (31, 762870257, 572206129)
+      {values_duckdb(MINHASH_COEFFS)}
     ), sh0 AS (
       SELECT DISTINCT doc_id,
              unnest(list_transform(generate_series(1, len(toks) - 2),
@@ -2827,14 +2756,10 @@ _MH_PORTABLE_PREFIX_SQL = """
       FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents) t
     ), ph AS (
       SELECT doc_id,
-             list_reduce(
-               list_prepend(CAST(0 AS BIGINT),
-                 list_transform(generate_series(1, len(shingle)),
-                                i -> CAST(ascii(shingle[i]) AS BIGINT))),
-               (a, c) -> (a * 131 + c) % 2147483647) AS ph
+             {poly_duckdb('shingle')} AS ph
       FROM sh0
     ), sig AS (
-      SELECT doc_id, i, min((a * ph + b) % 2147483647) AS m
+      SELECT doc_id, i, min((a * ph + b) % {P}) AS m
       FROM ph CROSS JOIN coeffs GROUP BY doc_id, i
     ), bands AS (
       SELECT doc_id, i // 4 AS band,
@@ -3215,18 +3140,14 @@ def lsh_band_sweep_recall(spark: SparkSession, sf: str) -> DataFrame:
 
 @register(
     "simhash_portable_fingerprints",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT DISTINCT doc_id, tok FROM (
         SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
       ) WHERE tok <> ''
     ), ph AS (
       SELECT doc_id,
-             list_reduce(
-               list_prepend(CAST(0 AS BIGINT),
-                 list_transform(generate_series(1, len(tok)),
-                                i -> CAST(ascii(tok[i]) AS BIGINT))),
-               (a, c) -> (a * 131 + c) % 2147483647) AS h
+             {poly_duckdb('tok')} AS h
       FROM toks
     ), votes AS (
       SELECT doc_id, b.bit,
@@ -3258,11 +3179,7 @@ def simhash_portable_fingerprints(
         .where(F.col("tok") != "")
         .distinct()
     )
-    ph = F.expr(
-        "aggregate(transform(sequence(1, length(tok)),"
-        " i -> cast(ascii(substring(tok, i, 1)) as bigint)),"
-        " 0L, (a, c) -> (a * 131 + c) % 2147483647)"
-    )
+    ph = F.expr(poly_spark("tok"))
     hashed = toks.select("doc_id", ph.alias("h"))
     bits = hashed.select(
         "doc_id",
@@ -3339,15 +3256,14 @@ def dedup_keep_list(spark: SparkSession, sf: str) -> DataFrame:
 #: eval set sits at ~2% false-positive rate; the bitmap is 128 KB.
 _BLOOM_BITS = 1 << 20
 _BLOOM_K = 4
-_BLOOM_COEFFS = [(2654435761, 7919), (40503, 104729), (69621, 3571), (48271, 16807)]
 
 
 def _bloom_probes(col):
     """k bit positions in [0, m) from one 64-bit hash (affine mixes)."""
-    h = F.pmod(col, F.lit((1 << 31) - 1))
+    h = F.pmod(col, F.lit(P))
     return [
         F.pmod(h * F.lit(a) + F.lit(b), F.lit(_BLOOM_BITS))
-        for a, b in _BLOOM_COEFFS[:_BLOOM_K]
+        for a, b in AFFINE_COEFFS[:_BLOOM_K]
     ]
 
 
@@ -3370,7 +3286,7 @@ def bloom_decontaminate_flags(
     prefilter at scan speed → exact verify on survivors."""
     spark = train.sparkSession
     gram_hash = (
-        F.expr(_SHINGLE_POLY) if portable else F.xxhash64("shingle")
+        F.expr(poly_spark("shingle")) if portable else F.xxhash64("shingle")
     )
     ev_hashes = shingles(eval_set, n=n).select(gram_hash.alias("sh"))
     probes = _bloom_probes(F.col("sh"))
@@ -3435,10 +3351,8 @@ def bloom_decontaminate_flags(
 def decontaminate_bloom_prefilter(
     spark: SparkSession, sf: str
 ) -> DataFrame:
-    from .sampling import sample_bucket
-
     docs = load(spark, sf, "documents")
-    bucket = sample_bucket(F.col("doc_id"))
+    bucket = bucket_spark(F.col("doc_id"))
     return bloom_decontaminate_flags(
         docs.where(bucket >= 200), docs.where(bucket < 200)
     )
@@ -3538,11 +3452,10 @@ def dedup_ensemble_flags(spark: SparkSession, sf: str) -> DataFrame:
 
 @register(
     "decontaminate_bloom_portable",
-    oracle="""
+    oracle=f"""
     WITH bucketed AS (
       SELECT doc_id, text,
-             ((((doc_id % 100003) * 2654435761 + 7919) % 2147483648)
-              % 10000) AS bucket
+             {bucket_duckdb('doc_id')} AS bucket
       FROM documents
     ), evg AS (
       SELECT DISTINCT
@@ -3551,17 +3464,12 @@ def dedup_ensemble_flags(spark: SparkSession, sf: str) -> DataFrame:
             FROM bucketed WHERE bucket < 200) t,
            LATERAL unnest(generate_series(1, len(toks) - 2)) AS u(i)
     ), evh AS (
-      SELECT DISTINCT list_reduce(
-               list_prepend(CAST(0 AS BIGINT),
-                 list_transform(generate_series(1, len(g)),
-                                i -> CAST(ascii(g[i]) AS BIGINT))),
-               (a, c) -> (a * 131 + c) % 2147483647) AS ph
+      SELECT DISTINCT {poly_duckdb('g')} AS ph
       FROM evg
     ), co(ci, a, b) AS (
-      VALUES (0, 2654435761, 7919), (1, 40503, 104729),
-             (2, 69621, 3571), (3, 48271, 16807)
+      VALUES {values_duckdb(AFFINE_COEFFS[:_BLOOM_K])}
     ), evb AS (
-      SELECT DISTINCT ((ph % 2147483647) * a + b) % 1048576 AS bit
+      SELECT DISTINCT ((ph % {P}) * a + b) % {_BLOOM_BITS} AS bit
       FROM evh CROSS JOIN co
     ), trg AS (
       SELECT DISTINCT doc_id,
@@ -3571,16 +3479,12 @@ def dedup_ensemble_flags(spark: SparkSession, sf: str) -> DataFrame:
            LATERAL unnest(generate_series(1, len(toks) - 2)) AS u(i)
     ), trh AS (
       SELECT doc_id, g,
-             list_reduce(
-               list_prepend(CAST(0 AS BIGINT),
-                 list_transform(generate_series(1, len(g)),
-                                i -> CAST(ascii(g[i]) AS BIGINT))),
-               (a, c) -> (a * 131 + c) % 2147483647) AS ph
+             {poly_duckdb('g')} AS ph
       FROM trg
     ), hits AS (
       SELECT t.doc_id, t.g
       FROM (SELECT doc_id, g,
-                   ci, ((ph % 2147483647) * a + b) % 1048576 AS bit
+                   ci, ((ph % {P}) * a + b) % {_BLOOM_BITS} AS bit
             FROM trh CROSS JOIN co) t
       JOIN evb USING (bit)
       GROUP BY t.doc_id, t.g
@@ -3599,10 +3503,8 @@ def dedup_ensemble_flags(spark: SparkSession, sf: str) -> DataFrame:
     tags=("dedup", "llm-pipeline", "decontamination", "sketch"),
 )
 def decontaminate_bloom_portable(spark: SparkSession, sf: str) -> DataFrame:
-    from .sampling import sample_bucket
-
     docs = load(spark, sf, "documents")
-    bucket = sample_bucket(F.col("doc_id"))
+    bucket = bucket_spark(F.col("doc_id"))
     return bloom_decontaminate_flags(
         docs.where(bucket >= 200), docs.where(bucket < 200), portable=True
     )

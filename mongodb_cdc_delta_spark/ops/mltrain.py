@@ -42,13 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ._cache import scoped_cache as _scoped_cache
-
-#: polynomial token hash shared with quality_linear_classifier/cms
-_TOK_POLY = (
-    "aggregate(transform(sequence(1, length(tok)),"
-    " i -> cast(ascii(substring(tok, i, 1)) as bigint)),"
-    " 0L, (a, c) -> (a * 131 + c) % 2147483647)"
-)
+from ._hash import poly_spark
 
 PPM = 1_000_000
 
@@ -71,7 +65,7 @@ def hashed_features(
     toks = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("tok")
     ).where(F.col("tok") != "")
-    bucket = (F.expr(_TOK_POLY) % dim).cast("int")
+    bucket = (F.expr(poly_spark("tok")) % dim).cast("int")
     feats = (
         toks.select("doc_id", bucket.alias("bucket"))
         .groupBy("doc_id", "bucket")

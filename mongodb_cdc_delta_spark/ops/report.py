@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries import load, register
+from ._hash import poly_duckdb, weight_sql
 from .dedup import _JACCARD_CTES, ngram_jaccard_pairs
 from .textstats_bridge import classifier_scores
 
@@ -36,16 +37,12 @@ from .textstats_bridge import classifier_scores
     ),
     hb AS (
       SELECT doc_id,
-             list_reduce(
-               list_prepend(CAST(0 AS BIGINT),
-                 list_transform(generate_series(1, len(tok)),
-                                i -> CAST(ascii(tok[i]) AS BIGINT))),
-               (a, c) -> (a * 131 + c) % 2147483647) % 64 AS b
+             {poly_duckdb('tok')} % 64 AS b
       FROM tok
     ),
     q AS (
       SELECT doc_id,
-             1 / (1 + exp(-(CAST(sum((b * 2654435761 + 7919) % 1000 - 500)
+             1 / (1 + exp(-(CAST(sum({weight_sql('b')})
                                  AS DOUBLE) / (1000.0 * count(*))))) AS p
       FROM hb GROUP BY doc_id
     )

@@ -11,13 +11,12 @@ portable integer hash of a key column, so
   row groups when the key correlates with file layout, and never
   materializes the other 99%.
 
-The hash is ``((key % 100003) * 2654435761 + 7919) % 2^31 % 10000`` —
-Knuth multiplicative mixing in exact integer arithmetic, identical in any
-SQL engine, and overflow-safe for any BIGINT key under Spark's ANSI mode
-(the inner mod bounds the product at ~2.7e14). Empirically uniform to
-<0.5% at fraction 0.1. Not cryptographic; it is a reproducible
-partitioner, not a security boundary (same tradeoff as Spark's own
-``sampleBy`` seeds).
+The hash is the affine-mix bucket of ``ops/_hash.py`` — Knuth
+multiplicative mixing in exact integer arithmetic, identical in any SQL
+engine and overflow-safe for any BIGINT key under Spark's ANSI mode.
+Empirically uniform to <0.5% at fraction 0.1. Not cryptographic; it is a
+reproducible partitioner, not a security boundary (same tradeoff as
+Spark's own ``sampleBy`` seeds).
 """
 
 from __future__ import annotations
@@ -26,30 +25,22 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries import load, register
-
-_MOD = 10_000
-
-
-def _affine_mix(key: Column) -> Column:
-    """((key % 100003) * 2654435761 + 7919) % 2^31 — the engine-portable
-    pseudorandom mix every deterministic sampler here derives from (the
-    SQL oracles inline the same constants)."""
-    return F.pmod(
-        F.pmod(key.cast("long"), F.lit(100003)) * 2654435761 + 7919,
-        F.lit(2147483648),
-    )
-
-
-def sample_bucket(key: Column) -> Column:
-    """Deterministic bucket in [0, 10000) from an integer key column."""
-    return F.pmod(_affine_mix(key), F.lit(_MOD))
+from ._hash import (
+    BUCKETS,
+    bucket_duckdb,
+    mix_duckdb,
+    mix_spark,
+    poly_duckdb,
+    weight_sql,
+)
+from ._hash import bucket_spark as sample_bucket  # public sampling name
 
 
 def deterministic_sample(
     df: DataFrame, key: str, fraction: float
 ) -> DataFrame:
     """Keep a reproducible ``fraction`` of rows by key hash."""
-    return df.where(sample_bucket(F.col(key)) < int(fraction * _MOD))
+    return df.where(sample_bucket(F.col(key)) < int(fraction * BUCKETS))
 
 
 def stratified_sample(
@@ -61,15 +52,11 @@ def stratified_sample(
     thresh = F.lit(0)
     for value, frac in sorted(fractions.items()):
         thresh = F.when(
-            F.col(strata) == value, F.lit(int(frac * _MOD))
+            F.col(strata) == value, F.lit(int(frac * BUCKETS))
         ).otherwise(thresh)
     return df.where(sample_bucket(F.col(key)) < thresh)
 
-
-# DuckDB has no pmod; plain % is identical for the non-negative keys here
-_BUCKET_SQL = (
-    "((((doc_id % 100003) * 2654435761 + 7919) % 2147483648) % 10000)"
-)
+_BUCKET_SQL = bucket_duckdb("doc_id")
 
 
 @register(
@@ -125,7 +112,7 @@ def stratified_sample_query(spark: SparkSession, sf: str) -> DataFrame:
     SELECT d.doc_id, d.lang, length(d.text) AS text_len
     FROM documents d JOIN keep USING (doc_id)
     WHERE length(d.text) >= 50
-      AND {_BUCKET_SQL.replace('doc_id', 'd.doc_id')} < 5000
+      AND {bucket_duckdb('d.doc_id')} < 5000
     """,
     description="composed training-data prep: exact dedup (keep min id "
     "per content hash) -> min-length quality gate -> deterministic 50% "
@@ -164,7 +151,7 @@ def training_mix_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     )
     SELECT d.doc_id, d.lang, p.keep_prob
     FROM documents d JOIN probs p USING (lang)
-    WHERE {_BUCKET_SQL.replace('doc_id', 'd.doc_id')}
+    WHERE {bucket_duckdb('d.doc_id')}
           < round(p.keep_prob * 10000)
     """,
     description="temperature-based language rebalancing (the multilingual "
@@ -305,8 +292,8 @@ def three_way_split(
     sizes; no shuffle, no stored split table). Buckets:
     [0, val) → val, [val, val+test) → test, rest → train."""
     b = sample_bucket(F.col(key))
-    v = int(val_fraction * _MOD)
-    t = int((val_fraction + test_fraction) * _MOD)
+    v = int(val_fraction * BUCKETS)
+    t = int((val_fraction + test_fraction) * BUCKETS)
     return df.withColumn(
         "split",
         F.when(b < v, F.lit("val"))
@@ -350,7 +337,7 @@ _N_SHARDS = 8
     oracle=f"""
     WITH mixed AS (
       SELECT doc_id,
-             (((doc_id % 100003) * 2654435761 + 7919) % 2147483648) AS m
+             {mix_duckdb('doc_id')} AS m
       FROM documents
     )
     SELECT doc_id,
@@ -370,7 +357,7 @@ def corpus_shard_shuffle(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load(spark, sf, "documents")
-    with_m = docs.select("doc_id", _affine_mix(F.col("doc_id")).alias("m"))
+    with_m = docs.select("doc_id", mix_spark(F.col("doc_id")).alias("m"))
     shard = F.pmod(F.col("m"), F.lit(_N_SHARDS)).cast("int")
     pos = F.row_number().over(
         Window.partitionBy(F.pmod(F.col("m"), F.lit(_N_SHARDS))).orderBy(
@@ -391,22 +378,17 @@ def corpus_shard_shuffle(spark: SparkSession, sf: str) -> DataFrame:
       ) WHERE tok <> ''
     ), hb AS (
       SELECT doc_id,
-             list_reduce(
-               list_prepend(CAST(0 AS BIGINT),
-                 list_transform(generate_series(1, len(tok)),
-                                i -> CAST(ascii(tok[i]) AS BIGINT))),
-               (a, c) -> (a * 131 + c) % 2147483647) % 64 AS b
+             {poly_duckdb('tok')} % 64 AS b
       FROM toks
     ), scored AS (
       SELECT doc_id,
-             sum((b * 2654435761 + 7919) % 1000 - 500) AS sw,
+             sum({weight_sql('b')}) AS sw,
              count(*) AS n
       FROM hb GROUP BY doc_id
     ), probs AS (
       SELECT doc_id,
              1 / (1 + exp(-(CAST(sw AS DOUBLE) / (1000.0 * n)))) AS p,
-             ((((doc_id % 100003) * 2654435761 + 7919) % 2147483648)
-              % 10000) AS bucket
+             {bucket_duckdb('doc_id')} AS bucket
       FROM scored
     )
     SELECT doc_id, round(p, 6) AS keep_prob
@@ -431,23 +413,18 @@ def importance_weighted_sample(spark: SparkSession, sf: str) -> DataFrame:
 
 @register(
     "curriculum_order",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id, tok FROM (
         SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
       ) WHERE tok <> ''
     ), hb AS (
       SELECT doc_id,
-             list_reduce(
-               list_prepend(CAST(0 AS BIGINT),
-                 list_transform(generate_series(1, len(tok)),
-                                i -> CAST(ascii(tok[i]) AS BIGINT))),
-               (a, c) -> (a * 131 + c) % 2147483647) % 64 AS b
+             {poly_duckdb('tok')} % 64 AS b
       FROM toks
     ), scored AS (
       SELECT doc_id,
-             round(1 / (1 + exp(-(CAST(sum((b * 2654435761 + 7919) % 1000
-                                          - 500) AS DOUBLE)
+             round(1 / (1 + exp(-(CAST(sum({weight_sql('b')}) AS DOUBLE)
                                   / (1000.0 * count(*))))), 6) AS p
       FROM hb GROUP BY doc_id
     ), q AS (
@@ -461,7 +438,7 @@ def importance_weighted_sample(spark: SparkSession, sf: str) -> DataFrame:
                        WHEN p >= q50 THEN 2
                        WHEN p >= q25 THEN 3
                        ELSE 4 END AS INT) AS band,
-             (((doc_id % 100003) * 2654435761 + 7919) % 2147483648) AS m
+             {mix_duckdb('doc_id')} AS m
       FROM scored, q
     )
     SELECT doc_id, band, CAST(m % 64 AS INT) AS shard,
@@ -501,7 +478,7 @@ def curriculum_order(spark: SparkSession, sf: str) -> DataFrame:
         .otherwise(4)
         .cast("int")
     )
-    mixed = _affine_mix(F.col("doc_id"))
+    mixed = mix_spark(F.col("doc_id"))
     banded = scored.crossJoin(F.broadcast(qs)).select(
         "doc_id", "p", band.alias("band"), mixed.alias("m")
     )
@@ -516,11 +493,10 @@ def curriculum_order(spark: SparkSession, sf: str) -> DataFrame:
 
 @register(
     "weighted_reservoir_sample",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT doc_id, n_chars,
-             (((doc_id % 100003) * 2654435761 + 7919) % 2147483648)
-               % 1000000 AS m
+             {mix_duckdb('doc_id')} % 1000000 AS m
       FROM documents
     ), k AS (
       SELECT doc_id, n_chars,
@@ -542,7 +518,7 @@ def curriculum_order(spark: SparkSession, sf: str) -> DataFrame:
 )
 def weighted_reservoir_sample(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents")
-    m = F.pmod(_affine_mix(F.col("doc_id")), F.lit(1000000))
+    m = F.pmod(mix_spark(F.col("doc_id")), F.lit(1000000))
     skey = F.round(F.log((m + 1) / 1000000.0) / F.col("n_chars"), 10)
     return (
         docs.select("doc_id", "n_chars", skey.alias("skey"))

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from ..queries import load, register, spread
 from ._cache import cache_scoped as _cache_scoped
 from ._cache import scoped_cache as _scoped_cache
+from ._hash import MINHASH_COEFFS, P, values_duckdb
 
 
 def _dot(a, b):
@@ -531,6 +532,19 @@ def assign_to_centroids(vecs: DataFrame, centroids) -> DataFrame:
     )
 
 
+def _semdedup_centroids(emb: DataFrame) -> list:
+    """The SemDeDup centroid rule: the first 8 ``vec_id``s, ordered, as
+    ``(vec_id, embedding)`` pairs. Bounded collect (8 rows); callers inline
+    them as literals in the plan (broadcast-by-value)."""
+    rows = (
+        emb.where(F.col("vec_id") < 8)
+        .select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .collect()
+    )
+    return [(r["vec_id"], r["embedding"]) for r in rows]
+
+
 def _fixed_centroid_assign(spark: SparkSession, sf: str) -> DataFrame:
     """SemDeDup stage 1: nearest of 8 fixed centroids, per-row argmax.
 
@@ -538,18 +552,10 @@ def _fixed_centroid_assign(spark: SparkSession, sf: str) -> DataFrame:
     arrays, so the assignment is a single zero-shuffle scan regardless of
     corpus size."""
     emb = load(spark, sf, "embeddings")
-    cents = (
-        emb.where(F.col("vec_id") < 8)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    )  # bounded: 8 rows; becomes literals in the plan (broadcast-by-value)
     # (an r10 spread() of the scan was tried here and REVERTED: the A/B
     # measured 1.18x — the repartition's sort+exchange of the embedding
     # payload cost more than the single-task argmax it parallelized)
-    return assign_to_centroids(
-        emb, [(r["vec_id"], r["embedding"]) for r in cents]
-    )
+    return assign_to_centroids(emb, _semdedup_centroids(emb))
 
 
 def _assign_centroids_kernel(vecs: DataFrame, centroids) -> DataFrame:
@@ -666,15 +672,7 @@ def semantic_dedup_prune(spark: SparkSession, sf: str) -> DataFrame:
     # per row — prune only needs the label (semantic_cluster_assign,
     # whose OUTPUT includes the sims, keeps the expression form).
     emb = load(spark, sf, "embeddings")
-    cents = (
-        emb.where(F.col("vec_id") < 8)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    )  # bounded: 8 rows
-    assigned = _assign_centroids_kernel(
-        emb, [(r["vec_id"], r["embedding"]) for r in cents]
-    )
+    assigned = _assign_centroids_kernel(emb, _semdedup_centroids(emb))
     counts = _close_lower_counts(assigned, threshold=0.35)
     return counts.select(
         "vec_id",
@@ -1825,31 +1823,18 @@ def embedding_anisotropy_report(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-#: first 16 of the portable minhash coefficient pairs (ops/dedup.py)
+#: first 16 of the portable minhash coefficient pairs (ops/_hash.py)
 #: reused as seeded hyperplane generators: coeff(j, d) =
-#: ((a_j * d + b_j) % 2147483647) - 1073741823 — engine-portable
-#: pseudo-random integers in (-2^30, 2^30], identical in SQL.
-_LSH_PLANES = [
-    (2075443165, 1671098287), (946466064, 250934579),
-    (16087819, 194655650), (1956305977, 2024077985),
-    (2017064809, 1733024478), (1250324205, 75003370),
-    (1442171594, 1488393902), (180255972, 211359734),
-    (1646005276, 761574164), (508545125, 37426449),
-    (66172593, 2118896851), (1693876517, 34017048),
-    (743220394, 1392248069), (1338486782, 1039910182),
-    (1322454143, 995461690), (319018672, 196037792),
-]
-
-_LSH_COEFF_VALUES = ",\n      ".join(
-    f"({j}, {a}, {b})" for j, (a, b) in enumerate(_LSH_PLANES)
-)
+#: ((a_j * d + b_j) % P) - 1073741823 — engine-portable pseudo-random
+#: integers in (-2^30, 2^30], identical in SQL.
+_LSH_PLANES = MINHASH_COEFFS[:16]
 
 
 @register(
     "ann_lsh_topk",
     oracle=f"""
     WITH coeffs(j, a, b) AS (VALUES
-      {_LSH_COEFF_VALUES}
+      {values_duckdb(_LSH_PLANES)}
     ),
     emb AS (
       SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
@@ -1869,7 +1854,7 @@ _LSH_COEFF_VALUES = ",\n      ".join(
     ),
     dots AS (
       SELECT vec_id, j,
-             sum(((a * dim + b) % 2147483647 - 1073741823) * m) AS dot
+             sum(((a * dim + b) % {P} - 1073741823) * m) AS dot
       FROM comps CROSS JOIN coeffs GROUP BY vec_id, j
     ),
     buckets AS (
@@ -1941,7 +1926,7 @@ def ann_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
     dot_aggs = []
     for j, (a, b) in enumerate(_LSH_PLANES):
         coeff = (
-            (F.lit(a) * F.col("dim") + F.lit(b)) % F.lit(2147483647)
+            (F.lit(a) * F.col("dim") + F.lit(b)) % F.lit(P)
             - F.lit(1073741823)
         )
         dot_aggs.append(F.sum(coeff * F.col("m")).alias(f"dot{j}"))

@@ -34,35 +34,30 @@ from pyspark.sql import functions as F
 from ..queries import load, register
 from ._cache import cache_scoped as _cache_scoped
 from ._cache import scoped_cache as _scoped_cache
+from ._hash import bucket_duckdb, bucket_spark
 from .dedup import (
     _JACCARD_CTES,
     _jaccard_pairs_sql,
     connected_components,
     ngram_jaccard_pairs,
 )
-from .sampling import sample_bucket
 
 #: split thresholds over the 10k-bucket hash space — 5% val, 5% test
 #: (mirrors dataset_three_way_split)
 _VAL_LT = 500
 _TEST_LT = 1000
 
-#: the engine-portable bucket expression over an arbitrary integer key
-#: (mirrors ops/sampling.py _BUCKET_SQL, parameterized by key column)
-def _bucket_sql(key: str) -> str:
-    return f"(((({key} % 100003) * 2654435761 + 7919) % 2147483648) % 10000)"
-
 
 def _split_case_sql(key: str) -> str:
     return (
-        f"CASE WHEN {_bucket_sql(key)} < {_VAL_LT} THEN 'val' "
-        f"WHEN {_bucket_sql(key)} < {_TEST_LT} THEN 'test' "
+        f"CASE WHEN {bucket_duckdb(key)} < {_VAL_LT} THEN 'val' "
+        f"WHEN {bucket_duckdb(key)} < {_TEST_LT} THEN 'test' "
         f"ELSE 'train' END"
     )
 
 
 def _split_col(key):
-    b = sample_bucket(key)
+    b = bucket_spark(key)
     return (
         F.when(b < _VAL_LT, F.lit("val"))
         .when(b < _TEST_LT, F.lit("test"))

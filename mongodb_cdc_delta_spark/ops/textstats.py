@@ -13,6 +13,13 @@ from pyspark.sql import functions as F
 from ..queries import load, register
 from ._cache import cache_scoped as _cache_scoped
 from ._cache import scoped_cache as _scoped_cache
+from ._hash import (
+    AFFINE_COEFFS,
+    poly_duckdb,
+    poly_spark,
+    values_duckdb,
+    weight_sql,
+)
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 _STOP_SQL = "('" + "', '".join(STOPWORDS) + "')"
@@ -356,7 +363,7 @@ def tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
 
 @register(
     "ngram_novelty_curve",
-    oracle="""
+    oracle=f"""
     WITH sh0 AS (
       SELECT DISTINCT doc_id,
              unnest(list_transform(generate_series(1, len(toks) - 2),
@@ -365,11 +372,7 @@ def tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
       FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents) t
     ), ph AS (
       SELECT doc_id,
-             list_reduce(
-               list_prepend(CAST(0 AS BIGINT),
-                 list_transform(generate_series(1, len(shingle)),
-                                i -> CAST(ascii(shingle[i]) AS BIGINT))),
-               (a, c) -> (a * 131 + c) % 2147483647) AS ph
+             {poly_duckdb('shingle')} AS ph
       FROM sh0
     ), nd AS (SELECT count(*) AS n_docs FROM documents),
     first_seen AS (
@@ -405,12 +408,12 @@ def tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
 def ngram_novelty_curve(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from .dedup import _SHINGLE_POLY, shingles
+    from .dedup import shingles
 
     docs = load(spark, sf, "documents")
     n_docs = docs.agg(F.count("*").alias("n_docs"))
     sh = shingles(docs, n=3).select(
-        "doc_id", F.expr(_SHINGLE_POLY).alias("ph")
+        "doc_id", F.expr(poly_spark("shingle")).alias("ph")
     )
     first_seen = sh.groupBy("ph").agg(F.min("doc_id").alias("first_doc"))
     bucketed = (
@@ -557,14 +560,10 @@ _CLF_BUCKETS = 64
       ) WHERE tok <> ''
     ), hb AS (
       SELECT doc_id,
-             list_reduce(
-               list_prepend(CAST(0 AS BIGINT),
-                 list_transform(generate_series(1, len(tok)),
-                                i -> CAST(ascii(tok[i]) AS BIGINT))),
-               (a, c) -> (a * 131 + c) % 2147483647) % {_CLF_BUCKETS} AS b
+             {poly_duckdb('tok')} % {_CLF_BUCKETS} AS b
       FROM toks
     ), wi AS (
-      SELECT doc_id, (b * 2654435761 + 7919) % 1000 - 500 AS w FROM hb
+      SELECT doc_id, {weight_sql('b')} AS w FROM hb
     )
     SELECT doc_id,
            CAST(count(*) AS BIGINT) AS n_tokens,
@@ -603,12 +602,6 @@ def quality_linear_classifier(spark: SparkSession, sf: str) -> DataFrame:
 
 
 _CMS_W = 8192
-_CMS_COEFFS = [(2654435761, 7919), (40503, 104729), (69621, 3571), (48271, 16807)]
-_TOK_POLY = (
-    "aggregate(transform(sequence(1, length(tok)),"
-    " i -> cast(ascii(substring(tok, i, 1)) as bigint)),"
-    " 0L, (a, c) -> (a * 131 + c) % 2147483647)"
-)
 
 
 @register(
@@ -620,15 +613,10 @@ _TOK_POLY = (
       ) WHERE tok <> '' GROUP BY tok
     ), hashed AS (
       SELECT tok, cnt,
-             list_reduce(
-               list_prepend(CAST(0 AS BIGINT),
-                 list_transform(generate_series(1, len(tok)),
-                                i -> CAST(ascii(tok[i]) AS BIGINT))),
-               (a, c) -> (a * 131 + c) % 2147483647) AS h
+             {poly_duckdb('tok')} AS h
       FROM counts
     ), coeffs(i, a, b) AS (VALUES
-      (0, 2654435761, 7919), (1, 40503, 104729),
-      (2, 69621, 3571), (3, 48271, 16807)
+      {values_duckdb(AFFINE_COEFFS)}
     ), counters AS (
       SELECT i, (a * h + b) % {_CMS_W} AS bucket, sum(cnt) AS v
       FROM hashed CROSS JOIN coeffs GROUP BY i, (a * h + b) % {_CMS_W}
@@ -666,10 +654,10 @@ def cms_token_counts(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
     )
     hashed = _scoped_cache(
-        counts.select("tok", "cnt", F.expr(_TOK_POLY).alias("h"))
+        counts.select("tok", "cnt", F.expr(poly_spark("tok")).alias("h"))
     )
     probe_rows = []
-    for i, (a, b) in enumerate(_CMS_COEFFS):
+    for i, (a, b) in enumerate(AFFINE_COEFFS):
         probe_rows.append(
             hashed.select(
                 F.lit(i).alias("i"),
@@ -694,7 +682,7 @@ def cms_token_counts(spark: SparkSession, sf: str) -> DataFrame:
         .select("tok", "cnt", "h")
     )
     top_probes = None
-    for i, (a, b) in enumerate(_CMS_COEFFS):
+    for i, (a, b) in enumerate(AFFINE_COEFFS):
         t = top.select(
             "tok",
             "cnt",
@@ -724,11 +712,7 @@ _HLL_M = 1 << _HLL_P  # 4096 registers
         SELECT unnest(string_split(text, ' ')) AS tok FROM documents
       ) WHERE tok <> ''
     ), hashed AS (
-      SELECT list_reduce(
-               list_prepend(CAST(0 AS BIGINT),
-                 list_transform(generate_series(1, len(tok)),
-                                i -> CAST(ascii(tok[i]) AS BIGINT))),
-               (a, c) -> (a * 131 + c) % 2147483647) AS h
+      SELECT {poly_duckdb('tok')} AS h
       FROM toks
     ), parts AS (
       SELECT h % {_HLL_M} AS idx, h // {_HLL_M} AS w FROM hashed
@@ -772,7 +756,7 @@ def hll_distinct_tokens(spark: SparkSession, sf: str) -> DataFrame:
         .where(F.col("tok") != "")
         .distinct()
     )
-    hashed = toks.select(F.expr(_TOK_POLY).alias("h"))
+    hashed = toks.select(F.expr(poly_spark("tok")).alias("h"))
     parts = hashed.select(
         (F.col("h") % _HLL_M).alias("idx"),
         F.expr(f"h div {_HLL_M}").alias("w"),

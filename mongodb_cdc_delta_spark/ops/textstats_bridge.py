@@ -6,6 +6,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._hash import poly_spark, weight_sql
+
 _CLF_BUCKETS = 64
 
 #: per-document (n_tokens, weight_sum) as ONE SQL expression pair over the
@@ -14,11 +16,9 @@ _CLF_BUCKETS = 64
 #: Lambda variables: outer accumulator `acc`/token `t`, inner `a`/`c`.
 _TOK_ARR = "filter(split(text, ' '), t -> t != '')"
 _W_SUM = (
-    f"aggregate({_TOK_ARR}, 0L, (acc, t) -> acc + ("
-    "(aggregate(transform(sequence(1, length(t)),"
-    " i -> cast(ascii(substring(t, i, 1)) as bigint)),"
-    " 0L, (a, c) -> (a * 131 + c) % 2147483647)"
-    f" % {_CLF_BUCKETS}) * 2654435761 + 7919) % 1000 - 500)"
+    f"aggregate({_TOK_ARR}, 0L, (acc, t) -> acc + "
+    + weight_sql(f"({poly_spark('t')} % {_CLF_BUCKETS})")
+    + ")"
 )
 
 

@@ -45,6 +45,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from ..queries import load, register
+from ._hash import bucket_duckdb, poly_duckdb, poly_spark
 from .webdataset import _export_sub_shards, portable_shard
 
 MANIFEST_NAME = "manifest.json"
@@ -272,8 +273,10 @@ def register_tokenbin_source(spark: SparkSession) -> None:
 
 _TB_N_SHARDS = 4
 _TB_VOCAB = 65519  # largest prime < 2^16: ids always fit uint16
-_TB_BUCKET_SQL = (
-    "((((doc_id % 100003) * 2654435761 + 7919) % 2147483648) % 10000)"
+#: Spark SQL: the token ids of ``text`` (polynomial fold mod _TB_VOCAB)
+_TB_TOKEN_IDS = (
+    "transform(filter(split(text, ' '), t -> t != ''),"
+    f" t -> cast({poly_spark('t')} % {_TB_VOCAB} as int))"
 )
 
 
@@ -284,15 +287,11 @@ _TB_BUCKET_SQL = (
       SELECT doc_id,
              list_transform(
                list_filter(string_split(text, ' '), t -> t <> ''),
-               t -> list_reduce(
-                      list_prepend(CAST(0 AS BIGINT),
-                        list_transform(generate_series(1, len(t)),
-                                       i -> CAST(ascii(t[i]) AS BIGINT))),
-                      (a, c) -> (a * 131 + c) % 2147483647) % {_TB_VOCAB}
+               t -> {poly_duckdb('t')} % {_TB_VOCAB}
              ) AS ids
       FROM documents
     )
-    SELECT CAST(({_TB_BUCKET_SQL} % {_TB_N_SHARDS}) AS INT) AS shard,
+    SELECT CAST(({bucket_duckdb('doc_id')} % {_TB_N_SHARDS}) AS INT) AS shard,
            count(*) AS n_docs,
            CAST(SUM(len(ids)) AS BIGINT) AS n_tokens,
            CAST(SUM(coalesce(list_sum(ids), 0)) AS BIGINT) AS sum_token_id,
@@ -324,21 +323,13 @@ def tokens_bin_export_report(spark: SparkSession, sf: str) -> DataFrame:
     from ..queries import spread
 
     docs = load(spark, sf, "documents")
-    poly = (
-        "transform("
-        "  filter(split(text, ' '), t -> t != ''),"
-        "  t -> cast(aggregate("
-        "         transform(sequence(1, length(t)),"
-        "                   i -> cast(ascii(substring(t, i, 1)) as bigint)),"
-        "         cast(0 as bigint),"
-        f"        (a, c) -> (a * 131 + c) % 2147483647) % {_TB_VOCAB}"
-        "       as int))"
-    )
     # r11 OPT (guide §2.5 single-file scan / §2.4): spread() ahead of the
     # per-CHARACTER interpreted polynomial fold — on the driver testdata's
     # one-row-group parquet the whole tokenize otherwise runs in ONE task
     # before the shard exchange.
-    ids = spread(docs).select("doc_id", F.expr(poly).alias("token_ids"))
+    ids = spread(docs).select(
+        "doc_id", F.expr(_TB_TOKEN_IDS).alias("token_ids")
+    )
     # r11 OPT (r10 verdict #4, guide §2.2/§6): write W sub-shards, W a
     # multiple of 4 sized from the source table's bytes (see
     # webdataset._export_sub_shards — bench corpus lands exactly on 4):

@@ -50,19 +50,16 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from ..queries import load, register
+from ._hash import bucket_duckdb, bucket_spark
 
 MANIFEST_NAME = "manifest.json"
-
-#: engine-portable shard id for integer keys — sample_bucket's affine mix
-#: folded to n_shards, SQL-mirrored in the oracle below
-from .sampling import sample_bucket  # noqa: E402
 
 
 def portable_shard(key, n_shards: int):
     """Deterministic shard id in [0, n_shards) from an integer key column
-    (same affine mix as ops.sampling.sample_bucket, so DuckDB oracles can
+    (the ops/_hash bucket folded to n_shards, so DuckDB oracles can
     reproduce the assignment exactly)."""
-    return F.pmod(sample_bucket(key), F.lit(n_shards)).cast("int")
+    return F.pmod(bucket_spark(key), F.lit(n_shards)).cast("int")
 
 
 #: source-parquet bytes per export sub-shard. Shard count must track
@@ -304,15 +301,12 @@ def register_webdataset_source(spark: SparkSession) -> None:
 
 
 _WDS_N_SHARDS = 8
-_WDS_BUCKET_SQL = (
-    "((((doc_id % 100003) * 2654435761 + 7919) % 2147483648) % 10000)"
-)
 
 
 @register(
     "multimodal_wds_export_report",
     oracle=f"""
-    SELECT CAST(({_WDS_BUCKET_SQL} % {_WDS_N_SHARDS}) AS INT) AS shard,
+    SELECT CAST(({bucket_duckdb('doc_id')} % {_WDS_N_SHARDS}) AS INT) AS shard,
            count(*) AS n_keys,
            2 * count(*) AS n_members,
            CAST(SUM(strlen(text)

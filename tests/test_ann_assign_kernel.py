@@ -220,21 +220,14 @@ class TestAssignCentroidsKernel:
     def _kernel_labels(self, spark, sf):
         from mongodb_cdc_delta_spark.ops.similarity import (
             _assign_centroids_kernel,
+            _semdedup_centroids,
         )
         from mongodb_cdc_delta_spark.queries import load
 
         emb = load(spark, sf, "embeddings")
-        cents = (
-            emb.where(F.col("vec_id") < 8)
-            .select("vec_id", "embedding")
-            .orderBy("vec_id")
-            .collect()
-        )
         return {
             r["vec_id"]: r["label"]
-            for r in _assign_centroids_kernel(
-                emb, [(c["vec_id"], c["embedding"]) for c in cents]
-            )
+            for r in _assign_centroids_kernel(emb, _semdedup_centroids(emb))
             .select("vec_id", "label")
             .collect()
         }

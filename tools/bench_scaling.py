@@ -22,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import force  # noqa: E402
 from mongodb_cdc_delta_spark.queries import all_queries  # noqa: E402
 from mongodb_cdc_delta_spark.session import get_spark  # noqa: E402
 
@@ -48,10 +49,6 @@ DEFAULT_NAMES = [
     "corpus_report",
     "trigram_backoff_score",
 ]
-
-
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:

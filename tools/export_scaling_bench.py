@@ -32,7 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from mongodb_cdc_delta_spark.ops.tokenbin import (  # noqa: E402
-    _TB_VOCAB,
+    _TB_TOKEN_IDS,
     register_tokenbin_source,
     write_token_shards,
 )
@@ -42,18 +42,6 @@ from mongodb_cdc_delta_spark.ops.webdataset import (  # noqa: E402
 )
 from mongodb_cdc_delta_spark.queries import load  # noqa: E402
 from mongodb_cdc_delta_spark.session import get_spark  # noqa: E402
-
-POLY = (
-    "transform("
-    "  filter(split(text, ' '), t -> t != ''),"
-    "  t -> cast(aggregate("
-    "         transform(sequence(1, length(t)),"
-    "                   i -> cast(ascii(substring(t, i, 1)) as bigint)),"
-    "         cast(0 as bigint),"
-    f"        (a, c) -> (a * 131 + c) % 2147483647) % {_TB_VOCAB}"
-    "       as int))"
-)
-
 
 def _dir_bytes(path: str, patterns: tuple[str, ...]) -> int:
     return sum(
@@ -78,7 +66,7 @@ def main() -> int:
 
     docs = load(spark, args.sf_dir, "documents")
     n_docs = docs.count()
-    ids = docs.select("doc_id", F.expr(POLY).alias("token_ids"))
+    ids = docs.select("doc_id", F.expr(_TB_TOKEN_IDS).alias("token_ids"))
     # tokenization is identical across runs — materialize once so the
     # timing isolates the WRITE, not the shared tokenize pass
     ids = ids.repartition(32).persist()
